@@ -374,6 +374,16 @@ def setup(
     return {"sources": sources, "results": results}
 
 
+def _is_iso_date(day: str) -> bool:
+    """True iff ``day`` is a canonical YYYY-MM-DD date string — the
+    only spelling whose string cast of the ``log_date`` partition
+    value matches it back."""
+    try:
+        return date.fromisoformat(day).isoformat() == day
+    except ValueError:
+        return False
+
+
 def maintain_rollup(
     spark,
     table_path: str,
@@ -402,6 +412,10 @@ def maintain_rollup(
     again next run. With ``checkpoint_dir``, dates carrying a batch
     newer than the stream's last committed batch are skipped (same
     in-flight guard as compact_table).
+    Partition dirs whose value is not a canonical ISO date
+    (``__HIVE_DEFAULT_PARTITION__``, ``20240105``) are skipped too:
+    the refresh cannot cover them, so they are never reported or
+    recorded as refreshed.
 
     Scale: ALL changed dates refresh in ONE job (opt r16, guide §2.6):
     a single partition-pruned scan filtered to the changed dates with
@@ -438,6 +452,11 @@ def maintain_rollup(
         if not entry.startswith("log_date="):
             continue
         day = entry.split("=", 1)[1]
+        if not _is_iso_date(day):
+            # __HIVE_DEFAULT_PARTITION__ (NULL dates) or a spelling
+            # Spark does not read back as this date (e.g. 20240105):
+            # the pruned refresh below would cover none of its rows
+            continue
         part_dir = os.path.join(table_path, entry)
         if last_committed is not None:
             batches = [

@@ -10,4 +10,4 @@ from .dedup import (  # noqa: F401
     simhash_near_dup_pairs,
 )
 from .parse import parse_log_events, split_dlq  # noqa: F401
-from .similarity import ann_topk_ivf, ann_topk_lsh, cosine_topk  # noqa: F401
+from .similarity import cosine_topk  # noqa: F401

@@ -1,12 +1,11 @@
-"""Engine-exact (oracle-replayable) IVF and IVF-PQ ANN.
+"""Engine-exact (oracle-replayable) ANN: IVF, IVF-PQ, hyperplane LSH,
+the IVF k-NN graph and SemDeDup — the engine's one ANN stack, serving
+every registered query and the streaming index maintainers
+(streaming/annindex.py, streaming/semdedup.py).
 
-The numpy-kernel ANN paths in :mod:`.similarity` are the production
-defaults — Arrow-batched matmuls whose float-summation order differs
-from any SQL engine's, which is why their queries ride a rows-only
-correctness check with in-band recall audits. This module re-expresses
-the SAME index structures (coarse IVF partitions; product-quantization
+The index structures (coarse IVF partitions; product-quantization
 codebooks + asymmetric-distance scoring + exact refine — Jégou et al.,
-TPAMI 2011) under the repo's exact-arithmetic contract so a DuckDB
+TPAMI 2011) run under the repo's exact-arithmetic contract so a DuckDB
 oracle replays EVERY step bit-for-bit and the ANN queries sit under the
 strict hash gate:
 
@@ -28,10 +27,9 @@ broadcast-as-literal centroids (no Python in the hot path — higher-
 order-function folds are interpreted but stay executor-side and
 shuffle-free); the per-iteration fit is one posexplode aggregation
 whose map-side combine shrinks the shuffle to n_clusters x dim partial
-sums, with the driver holding only the k x dim centroid matrix — the
-``fit_centroids_distributed`` shape with exact arithmetic. The search
-itself keeps the IVF contract: score only the probed clusters' members
-(a broadcast join on cluster id), rank, refine.
+sums, with the driver holding only the k x dim centroid matrix. The
+search itself keeps the IVF contract: score only the probed clusters'
+members (a broadcast join on cluster id), rank, refine.
 """
 
 from __future__ import annotations
@@ -418,6 +416,14 @@ def _derive_est_scored_rows(
         return None
 
 
+def _local_path(path: str) -> str:
+    """``path`` without a ``file:`` scheme (remote URIs unchanged)."""
+    for prefix in ("file://", "file:"):
+        if path.startswith(prefix):
+            return path[len(prefix):]
+    return path
+
+
 def _read_artifact_rows(spark: SparkSession, path: str) -> list[dict]:
     """Bounded persisted-fit artifact (centroids: k x dim doubles,
     codebooks: m x n_codes rows) to driver rows. LOCAL paths read via
@@ -427,11 +433,7 @@ def _read_artifact_rows(spark: SparkSession, path: str) -> list[dict]:
     non-local paths (object store at deployment scale) fall back to
     the Spark collect. Values identical either way: same files, and
     callers sort driver-side instead of via orderBy."""
-    p = path
-    if p.startswith("file://"):
-        p = p[7:]
-    elif p.startswith("file:"):
-        p = p[5:]
+    p = _local_path(path)
     if "://" not in p and os.path.isdir(p):
         try:
             import pyarrow.parquet as pq
@@ -446,20 +448,42 @@ def _collect_unit_queries(
     queries: DataFrame, id_col: str, vec_col: str, dim: int
 ):
     """Driver-side normalized query vectors ordered by id — the
-    probe-list-class collect the LSH persisted path established
-    (|queries| rows regardless of corpus size). Returns the pandas
-    frame (query_id, _u) plus the id column's Spark type string."""
+    probe-list-class collect of the persisted search paths (|queries|
+    rows regardless of corpus size). Returns the pandas frame
+    (query_id, _u) plus the id column's Spark type string.
+
+    Raises ValueError on repeated query ids: every probe producer emits
+    one row set per id, so a repeated id would score each candidate
+    once per copy and fill its top-k with duplicate neighbours. The
+    ids are on the driver already, so the check costs no job."""
     qpdf = (
         _unit(queries, id_col, vec_col, "query_id", dim)
         .orderBy("query_id")
         .toPandas()
     )
+    ids = qpdf["query_id"]
+    repeated = sorted(ids[ids.duplicated()].unique().tolist())
+    if repeated:
+        raise ValueError(
+            f"query ids must be unique; repeated ids: {repeated[:20]}"
+        )
     qid_type = "long"
     try:
         qid_type = queries.schema[id_col].dataType.simpleString()
     except Exception:
         pass
     return qpdf, qid_type
+
+
+def _read_centroids(spark: SparkSession, path: str) -> list[list[float]]:
+    """A persisted index's coarse centroids, ordered by cluster id."""
+    return [
+        list(r["centroid"])
+        for r in sorted(
+            _read_artifact_rows(spark, os.path.join(path, "centroids")),
+            key=lambda r: r["cluster"],
+        )
+    ]
 
 
 def _query_probes_driver(
@@ -474,7 +498,11 @@ def _query_probes_driver(
     all-NULL vector ties every dot and falls back to cluster order,
     matching NULLS-LAST + the _j tie-break). Returns the local probes
     frame (query_id, _qu, _cl) and the sorted distinct cluster list —
-    no probe job, no checkpoint, no distinct-collect job."""
+    no probe job, no checkpoint, no distinct-collect job.
+
+    ``qpdf`` must hold each query id once (``_collect_unit_queries``
+    enforces it): the output is one row per (query_id, _cl), which the
+    ADC shortlist and the scoring joins rely on."""
     import numpy as np
 
     C = np.asarray(centers, dtype=np.float64)
@@ -507,7 +535,11 @@ def _query_probes_exact(
     """(query_id, _qu, _cl): each query's nprobe nearest centroids —
     broadcast cross join against the centroid frame (one codegen'd dot
     per pair; see _assign_exact for why not one giant literal array),
-    (dot DESC, cluster) window rank over |queries| x k tiny rows."""
+    (dot DESC, cluster) window rank over |queries| x k tiny rows.
+
+    ``qn`` must hold each query id once: the window ranks per id, so a
+    repeated id yields 2 x nprobe rows and downstream joins score every
+    candidate twice (one row per (query_id, _cl) is the contract)."""
     spark = qn.sparkSession
     cdf = F.broadcast(_centers_df(spark, centers))
     wq = Window.partitionBy("query_id").orderBy(F.col("_dot").desc(), "_j")
@@ -550,10 +582,16 @@ def ann_topk_ivf_exact(
     """IVF-flat ANN under the exact-arithmetic contract: fit (or take)
     replayable centroids, assign the corpus and probe the queries with
     the same argmax-of-fold-dots, score exact cosine (normalized-vector
-    dot) inside the probed clusters only, rank (cos DESC, id). Same
-    output shape as similarity.ann_topk_ivf; still genuinely
-    approximate (nprobe < n_clusters), but every emitted double is
-    SQL-reproducible.
+    dot) inside the probed clusters only, rank (cos DESC, id). Output
+    (query_id, neighbor_id, cosine, rnk), the cosine_topk shape; still
+    genuinely approximate (nprobe < n_clusters), but every emitted
+    double is SQL-reproducible.
+
+    Query ids must be unique: each id gets its own probe rows, so a
+    repeated id scores every candidate once per copy and the top-k
+    window fills with duplicate neighbours (the persisted
+    query_*_index_exact paths reject repeats; here it is the caller's
+    contract, checking it would cost a job).
 
     ``est_scored_rows``: the caller's estimate of rows the scoring
     stage will touch (|queries| * |corpus| * nprobe / n_clusters) —
@@ -596,7 +634,7 @@ def ann_topk_ivf_exact(
     return _rank_topk(scored, k)
 
 
-# --- persisted IVF index (exact-arith twin of build/query_ivf_index) ----
+# --- persisted IVF index ------------------------------------------------
 
 
 def build_ivf_index_exact(
@@ -654,20 +692,15 @@ def query_ivf_index_exact(
     bytes are read), then fold-dot scoring + rank exactly like the
     one-shot path. ``est_scored_rows`` feeds the dot_cols cost rule
     (see ann_topk_ivf_exact); omitted, it is derived from the index's
-    parquet footers + the query count (self-feeding, r14)."""
+    parquet footers + the query count (self-feeding, r14). Query ids
+    must be unique (ValueError otherwise — see _collect_unit_queries)."""
     # opt r15 (guide §1.2/§5, the LSH persisted-path pattern): the
     # centroid artifact reads driver-side (no job on local paths), the
     # probe assignment replays driver-side from ONE query collect
     # (bit-identical fold arithmetic), and the estimate is pure
     # arithmetic over footer rows — the pre-scan driver work drops
     # from 4 scheduled jobs to 1.
-    centers = [
-        list(r["centroid"])
-        for r in sorted(
-            _read_artifact_rows(spark, os.path.join(path, "centroids")),
-            key=lambda r: r["cluster"],
-        )
-    ]
+    centers = _read_centroids(spark, path)
     qpdf, qid_type = _collect_unit_queries(queries, id_col, vec_col, dim)
     probes, needed = _query_probes_driver(
         spark, qpdf, centers, nprobe, qid_type
@@ -1005,7 +1038,6 @@ def ann_topk_ivfpq_exact(
     pq_iters: int = 2,
     dim: int = 64,
     artifacts: tuple | None = None,
-    est_scored_rows: int | None = None,
 ) -> DataFrame:
     """IVF-PQ with ADC + exact refine, every double SQL-reproducible:
     coarse probe (the exact-arith IVF machinery), candidates scored
@@ -1014,7 +1046,8 @@ def ann_topk_ivfpq_exact(
     (adc DESC, id), then exact normalized-dot cosine on the shortlist
     ranks the final top-k. ``artifacts`` = (centers, books, codes_df)
     from a persisted index (codes in the encode_codes_arrays layout);
-    None fits + encodes one-shot.
+    None fits + encodes one-shot. Query ids must be unique (see
+    ann_topk_ivf_exact).
 
     opt r16 (guide §2.4): the ADC runs from the array code layout —
     per-query LUT broadcast + one zip_with/aggregate decimal fold per
@@ -1024,10 +1057,7 @@ def ann_topk_ivfpq_exact(
     expression), identical sums (fixed-scale DECIMAL addition is
     exact, so fold order == groupBy order), so the shortlist and the
     final top-k are bit-equal — pinned in tests/test_opt_r16.py
-    against the retired groupBy form. ``est_scored_rows`` is retired
-    (kept for API stability): no per-candidate dot remains for the
-    cost rule to steer."""
-    del est_scored_rows  # retired (see docstring)
+    against the retired groupBy form."""
     spark = corpus.sparkSession
     sub = dim // m
     cn = _unit(corpus, id_col, vec_col, "neighbor_id", dim,
@@ -1068,6 +1098,95 @@ def ann_topk_ivfpq_exact(
     return _rank_topk(scored, k)
 
 
+# --- persisted IVF-PQ index ----------------------------------------------
+#
+# Layout under the index root:
+#   centroids/  codebooks/            frozen fit artifacts (tiny)
+#   codes/ingest_batch=<b>/cluster=<j>/   array-layout PQ codes
+#   vectors/ingest_batch=<b>/             normalized vectors (refine)
+#   _FORMAT                           layout version, written last
+# Batch 0 is the build; appends add leafs 1, 2, ...; a compaction
+# (streaming/neardup._fold_store) folds them into one negative-id leaf
+# and keeps the cluster= sub-partitioning, so probe pruning survives.
+
+# 4 = ingest_batch leafs over array codes, parquet _FORMAT marker
+IVFPQ_FORMAT_VERSION = 4
+_IVFPQ_FORMAT_DIR = "_FORMAT"
+
+
+def _write_ivfpq_format(spark: SparkSession, path: str, version: int) -> None:
+    """The format marker is a one-row parquet artifact, so it is
+    written and read through the same local-or-Spark split as the fit
+    artifacts (works on object-store paths too)."""
+    spark.createDataFrame([(int(version),)], "version int").coalesce(
+        1
+    ).write.mode("overwrite").parquet(os.path.join(path, _IVFPQ_FORMAT_DIR))
+
+
+def _check_ivfpq_format(spark: SparkSession, path: str) -> None:
+    """Fail fast on an index this code cannot read: a missing or older
+    ``_FORMAT`` marker means a build from before the current layout
+    (or an interrupted one), which would otherwise die deep in the
+    plan on an unresolved column."""
+    try:
+        rows = _read_artifact_rows(
+            spark, os.path.join(path, _IVFPQ_FORMAT_DIR)
+        )
+        version = rows[0]["version"] if rows else None
+    except Exception:  # no marker: the Spark read raises AnalysisException
+        version = None
+    if version != IVFPQ_FORMAT_VERSION:
+        raise ValueError(
+            f"IVF-PQ index at {path} has format version {version}, this "
+            f"engine reads version {IVFPQ_FORMAT_VERSION}: rebuild the "
+            "index with build_ivfpq_index_exact"
+        )
+
+
+def _read_ivfpq_artifacts(spark: SparkSession, path: str):
+    """(centers, books, m, dim) of a persisted IVF-PQ index, after the
+    format check — the one driver-side artifact read that query and
+    append share. ``m`` and ``dim`` come from the artifacts
+    themselves, so callers cannot pass a mismatched shape."""
+    _check_ivfpq_format(spark, path)
+    centers = _read_centroids(spark, path)
+    books = [
+        (int(r["_j"]), int(r["_t"]), list(r["_cb"]))
+        for r in sorted(
+            _read_artifact_rows(spark, os.path.join(path, "codebooks")),
+            key=lambda r: (r["_j"], r["_t"]),
+        )
+    ]
+    m = 1 + max(j for j, _t, _v in books)
+    return centers, books, m, len(centers[0])
+
+
+def _write_ivfpq_leaf(
+    path: str, cn: DataFrame, codes: DataFrame, batch_id: int
+) -> None:
+    """Land one ingest leaf: array-layout codes (cluster-partitioned)
+    and the normalized vectors, both as ``ingest_batch=<batch_id>``.
+    Batch 0 is the build — a full overwrite of both tables. Batch
+    n >= 1 is an append — a DYNAMIC partition overwrite that replaces
+    only its own leafs, so a re-delivered batch is a no-op (the
+    exactly-once contract of the streaming stores)."""
+    def write(df: DataFrame, table: str, sub_partitions: list[str]):
+        w = df.withColumn("ingest_batch", F.lit(int(batch_id))).write
+        w = w.mode("overwrite")
+        if batch_id > 0:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.partitionBy("ingest_batch", *sub_partitions).parquet(
+            os.path.join(path, table)
+        )
+
+    write(
+        codes.withColumnRenamed("_cl", "cluster").repartition("cluster"),
+        "codes",
+        ["cluster"],
+    )
+    write(cn, "vectors", [])
+
+
 def build_ivfpq_index_exact(
     corpus: DataFrame,
     path: str,
@@ -1081,10 +1200,14 @@ def build_ivfpq_index_exact(
     dim: int = 64,
 ) -> None:
     """Persist the exact-arith IVF-PQ artifacts: centroids, codebooks,
-    and the (neighbor_id, _j, _t) code table partitioned by cluster —
-    plus the normalized vectors for the refine fetch, so the index is
-    self-contained."""
+    the array-layout code table partitioned by cluster, and the
+    normalized vectors for the refine fetch (the index is
+    self-contained) — codes and vectors as the ``ingest_batch=0``
+    leaf that :func:`append_ivfpq_index_exact` extends. The
+    ``_FORMAT`` marker is written last (and reset to version 0 first,
+    so a rebuild cut short never reads as a complete index)."""
     spark = corpus.sparkSession
+    _write_ivfpq_format(spark, path, 0)
     centers = fit_centroids_exact(
         corpus, n_clusters, iters, id_col, vec_col, "ivf", dim
     )
@@ -1113,14 +1236,32 @@ def build_ivfpq_index_exact(
     # array layout (opt r16): one row per vector, codes as array<int> —
     # see encode_codes_arrays; the exchange-free ADC fold reads this
     codes = encode_codes_arrays(cn, centers, books, m=m, dim=dim)
-    (
-        codes.withColumnRenamed("_cl", "cluster")
-        .repartition("cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(os.path.join(path, "codes"))
-    )
-    cn.write.mode("overwrite").parquet(os.path.join(path, "vectors"))
+    _write_ivfpq_leaf(path, cn, codes, 0)
+    _write_ivfpq_format(spark, path, IVFPQ_FORMAT_VERSION)
+
+
+def append_ivfpq_index_exact(
+    corpus: DataFrame,
+    path: str,
+    batch_id: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Add vectors to a persisted IVF-PQ index with its quantizer
+    frozen (the FAISS add-with-fixed-quantizer contract): normalize,
+    assign to the stored centroids, encode with the stored codebooks —
+    exactly the codes encode_codes_arrays over the whole corpus under
+    those artifacts gives (pinned in tests/test_r10.py) — and land
+    them as the ``ingest_batch=<batch_id>`` leaf. Re-delivering a
+    batch replaces its own leaf (see _write_ivfpq_leaf)."""
+    if batch_id <= 0:
+        raise ValueError("append batch_id must be >= 1 (0 is the build leaf)")
+    spark = corpus.sparkSession
+    centers, books, m, dim = _read_ivfpq_artifacts(spark, path)
+    cn = _unit(corpus, id_col, vec_col, "neighbor_id", dim,
+               materialize=True)
+    codes = encode_codes_arrays(cn, centers, books, m=m, dim=dim)
+    _write_ivfpq_leaf(path, cn, codes, batch_id)
 
 
 def query_ivfpq_index_exact(
@@ -1132,36 +1273,19 @@ def query_ivfpq_index_exact(
     refine_factor: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 4,
-    dim: int = 64,
-    est_scored_rows: int | None = None,
 ) -> DataFrame:
     """Search the persisted exact-arith IVF-PQ index: probed cluster
     ids partition-prune the code-table scan; ADC + refine run exactly
     like the one-shot path (bit-equal results by construction).
-    ``est_scored_rows`` is retired (opt r16 — the LUT-fold ADC has no
-    per-candidate dot for the cost rule to steer; kept for API
-    stability)."""
-    del est_scored_rows
-    # opt r15 (guide §1.2/§5, the LSH persisted-path pattern): both
-    # fit artifacts read driver-side (no job on local paths), probe
-    # assignment replayed driver-side from ONE query collect
-    # (bit-identical fold arithmetic) — pre-scan driver work drops
-    # from 5 scheduled jobs to 1.
-    centers = [
-        list(r["centroid"])
-        for r in sorted(
-            _read_artifact_rows(spark, os.path.join(path, "centroids")),
-            key=lambda r: r["cluster"],
-        )
-    ]
-    books = [
-        (int(r["_j"]), int(r["_t"]), list(r["_cb"]))
-        for r in sorted(
-            _read_artifact_rows(spark, os.path.join(path, "codebooks")),
-            key=lambda r: (r["_j"], r["_t"]),
-        )
-    ]
+    ``m`` and the vector dim come from the stored artifacts. Query ids
+    must be unique (ValueError otherwise — see _collect_unit_queries);
+    an index without the current ``_FORMAT`` marker raises ValueError
+    asking for a rebuild."""
+    # opt r15 (guide §1.2/§5): both fit artifacts read driver-side (no
+    # job on local paths), probe assignment replayed driver-side from
+    # ONE query collect (bit-identical fold arithmetic) — pre-scan
+    # driver work drops from 5 scheduled jobs to 1.
+    centers, books, m, dim = _read_ivfpq_artifacts(spark, path)
     qpdf, qid_type = _collect_unit_queries(queries, id_col, vec_col, dim)
     probes, needed = _query_probes_driver(
         spark, qpdf, centers, nprobe, qid_type
@@ -1169,9 +1293,11 @@ def query_ivfpq_index_exact(
     codes = (
         spark.read.parquet(os.path.join(path, "codes"))
         .filter(F.col("cluster").isin(needed))
-        .withColumnRenamed("cluster", "_cl")
+        .select("neighbor_id", "_ts", F.col("cluster").alias("_cl"))
     )
-    cn = spark.read.parquet(os.path.join(path, "vectors"))
+    cn = spark.read.parquet(os.path.join(path, "vectors")).select(
+        "neighbor_id", "_u"
+    )
     return _ivfpq_search_persisted(
         spark, cn, codes, probes, books, k, refine_factor, m, dim,
     )
@@ -1179,15 +1305,12 @@ def query_ivfpq_index_exact(
 
 def _ivfpq_search_persisted(
     spark, cn, codes_df, probes, books, k, refine_factor, m, dim,
-    est_scored_rows=None,
 ):
-    """ADC + refine tail shared by the persisted path (array-layout
-    codes already cluster-pruned; ``cn`` the stored normalized
-    vectors). opt r16: LUT-broadcast + zip_with/aggregate fold — no
+    """ADC + refine tail of the persisted path (array-layout codes
+    already cluster-pruned; ``cn`` the stored normalized vectors).
+    opt r16: LUT-broadcast + zip_with/aggregate fold — no
     candidates-x-m fanout, no ADC groupBy exchange (see
-    ann_topk_ivfpq_exact). ``est_scored_rows`` is retired (kept for
-    API stability)."""
-    del est_scored_rows  # retired (no per-candidate dot remains)
+    ann_topk_ivfpq_exact)."""
     sub = dim // m
     qn = probes.select("query_id", F.col("_qu").alias("_u")).dropDuplicates(
         ["query_id"]
@@ -1215,10 +1338,9 @@ def _ivfpq_search_persisted(
 # standalone Project (measured at sf0.1: 0.45s standalone vs 4.0s
 # join-fused vs 7.4s filter-fused per ~1.5M pairs), and staging via
 # localCheckpoint pays a corpus*nprobe*1KB materialization instead.
-# For the two pair-heavy operators (k-NN graph, SemDeDup) the exact
-# contract is therefore executed as a numpy PER-DIM FOLD inside the
-# same cogroup-by-cluster plan the production BLAS operator
-# (similarity.ann_knn_graph_ivf) uses:
+# For the pair-heavy operators (k-NN graph, SemDeDup and its streaming
+# cross-batch scorer) the exact contract is therefore executed as a
+# numpy PER-DIM FOLD inside a cogroup-by-cluster plan:
 #
 #     acc = 0; for d in range(dim): acc += Q[:, d] * C[:, d]
 #
@@ -1497,8 +1619,7 @@ def ann_knn_graph_ivf_exact(
     double SQL-reproducible: one assignment pass, per-vector nprobe
     probes, candidates scored inside a cogroup on the cluster key
     (both sides shuffle on cluster id — the correct shape when the
-    query set IS the corpus, and the SAME plan as the production BLAS
-    operator similarity.ann_knn_graph_ivf), self-pairs excluded BY ID,
+    query set IS the corpus), self-pairs excluded BY ID,
     exact per-dim-fold cosine, (cos DESC, id) rank. Still approximate
     (cross-cluster neighbors beyond the probes are missed) — recall
     rides along via with_recall_at_k at the query layer, hash-checked.
@@ -2004,15 +2125,12 @@ def query_lsh_index_exact(
     probed buckets become a literal IN-filter on the partition column
     (FileScan PartitionFilters — only ~(num_planes+1)/2^num_planes of
     the index bytes are read), then fold-dot scoring + rank exactly
-    like the one-shot path."""
+    like the one-shot path. Query ids must be unique (ValueError
+    otherwise — see _collect_unit_queries)."""
     import numpy as np
 
     planes = lsh_plane_weights_exact(num_planes, dim)
-    qpdf = (
-        _unit(queries, id_col, vec_col, "query_id", dim)
-        .orderBy("query_id")
-        .toPandas()
-    )
+    qpdf, qid_type = _collect_unit_queries(queries, id_col, vec_col, dim)
     W = np.array(planes, dtype=np.float64)
     probe_rows = []
     for qid, qu in zip(qpdf["query_id"], qpdf["_u"]):
@@ -2031,11 +2149,6 @@ def query_lsh_index_exact(
             qu_list = [float(x) for x in U[0]]
         for bb in [b] + [b ^ (1 << p) for p in range(num_planes)]:
             probe_rows.append((qid, qu_list, bb))
-    qid_type = "long"
-    try:
-        qid_type = queries.schema[id_col].dataType.simpleString()
-    except Exception:
-        pass
     probes = spark.createDataFrame(
         probe_rows, f"query_id {qid_type}, _qu array<double>, _b int"
     )

@@ -24,8 +24,6 @@ from ..operators.dedup import (
 )
 from ..operators.multimodal import decode_image_features, with_media_meta
 from ..operators.similarity import (
-    ann_topk_ivf,
-    ann_topk_lsh,
     audit_sample_pred,
     audit_sample_sql,
     cosine_pairs_exact,
@@ -1213,19 +1211,22 @@ def embedding_ann_ivfpq_768(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # hyperparameters live in the cache key (ADVICE r13): a future
     # param tune rebuilds instead of silently serving a stale index;
-    # trailing "a" = the r16 array code layout
+    # trailing "v4" = on-disk format version 4 (ingest_batch leafs
+    # over the array code layout, ivf_exact.IVFPQ_FORMAT_VERSION)
     path = materialize_dir(
         spark,
         sf_dir,
-        "ivfpqx768-c8m16n64i2p1a",
+        "ivfpqx768-c8m16n64i2p1v4",
         builder=lambda: corpus,
         source="embeddings.parquet",
         writer=_write,
-        supersedes=("ivfpqx768", "ivfpqx768-c8m16n64i2p1"),
+        supersedes=(
+            "ivfpqx768", "ivfpqx768-c8m16n64i2p1",
+            "ivfpqx768-c8m16n64i2p1a", "ivfpqx768-c8m16n64i2p1v3",
+        ),
     )
     ann = query_ivfpq_index_exact(
-        spark, path, queries, k=5, nprobe=4, refine_factor=12, m=16,
-        dim=_EMB768_DIM,
+        spark, path, queries, k=5, nprobe=4, refine_factor=12,
     )
     exact = exact_fold_topk(corpus=corpus, queries=queries, k=5)
     return with_recall_at_k(ann, exact, k=5,
@@ -5297,20 +5298,21 @@ def embedding_ann_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # hyperparameters pinned in the key (ADVICE r13); m16x64 is the
     # operating-curve recommendation (r15 — supersedes the saturating
-    # m4x16 point); trailing "a" = the r16 array code layout (a format
+    # m4x16 point); trailing "v4" = on-disk format version 4 (a format
     # change is a rebuild, never a silent stale read)
     path = materialize_dir(
         spark,
         sf_dir,
-        "ivfpqx-c16m16n64i3p2a",
+        "ivfpqx-c16m16n64i3p2v4",
         builder=lambda: corpus,
         source="embeddings.parquet",
         writer=_write,
         supersedes=(
             "ivfpqx", "ivfpqx-c16m4n16i3p2", "ivfpqx-c16m16n64i3p2",
+            "ivfpqx-c16m16n64i3p2a", "ivfpqx-c16m16n64i3p2v3",
         ),
     )
-    ann = query_ivfpq_index_exact(spark, path, queries, k=5, m=16)
+    ann = query_ivfpq_index_exact(spark, path, queries, k=5)
     # r15 opt: numpy fold-kernel audit (see embedding_ann_ivf)
     exact = exact_fold_topk(corpus=corpus, queries=queries, k=5)
     return with_recall_at_k(ann, exact, k=5,

@@ -12,18 +12,21 @@ Every vector is multi-assigned to its ``n_assign`` nearest centroids
 share ANY assigned cluster.
 
 Per batch:
-- intra-batch pairs: operators/similarity.semdedup_pairs over the
-  batch with the PINNED centers (same per-cluster blocked GEMM);
+- intra-batch pairs: operators/ivf_exact.semdedup_pairs_exact over the
+  batch with the PINNED centers (same per-cluster exact-fold scoring);
 - cross-batch pairs: cogrouped applyInPandas on cluster id — one
-  (new x stored) GEMM per cluster slice, never a pair-row join;
+  (new x stored) _exact_fold_gram block per cluster slice over unit
+  vectors, the arithmetic the intra-batch pairs use, never a pair-row
+  join;
 - alerts materialize BEFORE the store update (a vector never matches
   itself through the store); re-delivered batches collapse to one
   alert per unordered pair, exactly like the MinHash guard.
 
-Store layout mirrors neardup.py: ``vectors/`` partitioned by
-``ingest_batch`` with dynamic-overwrite idempotence, and the same
-``_fold_store`` compaction (committed leafs fold into a fresh
-negative-id leaf, checkpoint-aware).
+Store layout mirrors neardup.py: ``vectors/`` (normalized vectors plus
+their assigned clusters) partitioned by ``ingest_batch`` with
+dynamic-overwrite idempotence, and the same ``_fold_store``
+compaction (committed leafs fold into a fresh negative-id leaf,
+checkpoint-aware).
 
 Scale: the shuffle moves each new vector n_assign times keyed on
 cluster id; a stored cluster slice must fit one executor (the
@@ -38,11 +41,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import (
-    _fit_centroids,
-    _probe_factory,
-    as_double,
-    semdedup_pairs,
+from ..operators.ivf_exact import (
+    _exact_fold_gram,
+    _query_probes_exact,
+    _read_centroids,
+    _unit,
+    fit_centroids_exact,
+    semdedup_pairs_exact,
 )
 from .neardup import _fold_store
 
@@ -51,7 +56,12 @@ class StreamingSemDedup:
     """Micro-batch semantic-dup guard over a persisted vector store.
 
     ``process_batch`` returns (new_id, old_id, cosine) alert pairs —
-    old_id from any prior batch or the same batch.
+    old_id from any prior batch or the same batch. Over a sequence of
+    batches the alerts are exactly semdedup_pairs_exact over their
+    union with the same centres (pinned in test_r9.py). The vector
+    dimension is read from the centres. A store written before the
+    unit-vector layout (raw ``c_vec`` column) raises ValueError asking
+    for a rebuild.
     """
 
     def __init__(
@@ -62,10 +72,9 @@ class StreamingSemDedup:
         threshold: float = 0.97,
         n_clusters: int = 16,
         n_assign: int = 2,
-        seed: int = 42,
-        fit_sample_limit: int = 25_000,
         centers=None,
     ):
+        self.store_dir = store_dir
         self.vectors_path = os.path.join(store_dir, "vectors")
         self.centroids_path = os.path.join(store_dir, "centroids")
         self.id_col = id_col
@@ -73,28 +82,19 @@ class StreamingSemDedup:
         self.threshold = float(threshold)
         self.n_clusters = n_clusters
         self.n_assign = n_assign
-        self.seed = seed
-        self.fit_sample_limit = fit_sample_limit
         self._centers = centers
 
-    def _ensure_centers(self, c: DataFrame, spark: SparkSession):
+    def _ensure_centers(self, batch_df: DataFrame, spark: SparkSession):
         """Pin the centroid set: passed in > persisted > fit on the
-        first batch (then persisted, so a restart keeps the SAME
-        geometry)."""
-        import numpy as np
-
+        first batch with fit_centroids_exact (then persisted, so a
+        restart keeps the SAME geometry)."""
         if self._centers is None and os.path.isdir(self.centroids_path):
-            rows = (
-                spark.read.parquet(self.centroids_path)
-                .orderBy("cluster")
-                .collect()
-            )
-            self._centers = np.array(
-                [r["centroid"] for r in rows], dtype=np.float64
-            )
+            self._centers = _read_centroids(spark, self.store_dir)
         if self._centers is None:
-            self._centers = _fit_centroids(
-                c, self.n_clusters, self.seed, self.fit_sample_limit
+            dim = batch_df.select(F.size(self.vec_col)).first()[0]
+            self._centers = fit_centroids_exact(
+                batch_df, self.n_clusters, id_col=self.id_col,
+                vec_col=self.vec_col, dim=dim,
             )
         if not os.path.isdir(self.centroids_path):
             spark.createDataFrame(
@@ -106,31 +106,19 @@ class StreamingSemDedup:
             ).coalesce(1).write.mode("overwrite").parquet(self.centroids_path)
         return self._centers
 
-    def _assigned(self, c: DataFrame, centers) -> DataFrame:
-        m = min(max(int(self.n_assign), 1), len(centers))
-        return c.select(
-            F.col("neighbor_id").alias("_id"),
-            F.col("c_vec").alias("_v"),
-            F.explode(_probe_factory(centers, m)(F.col("c_vec"))).alias(
-                "cluster"
-            ),
-        )
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
         spark = batch_df.sparkSession
-        c = batch_df.select(
-            F.col(self.id_col).alias("neighbor_id"),
-            as_double(F.col(self.vec_col)).alias("c_vec"),
-        )
-        centers = self._ensure_centers(c, spark)
+        centers = self._ensure_centers(batch_df, spark)
+        dim = len(centers[0])
 
-        intra = semdedup_pairs(
+        intra = semdedup_pairs_exact(
             batch_df,
             threshold=self.threshold,
+            n_assign=self.n_assign,
             id_col=self.id_col,
             vec_col=self.vec_col,
+            dim=dim,
             centers=centers,
-            n_assign=self.n_assign,
         ).select(
             F.col("id_a").alias("new_id"),
             F.col("id_b").alias("old_id"),
@@ -142,15 +130,32 @@ class StreamingSemDedup:
         # alerts materialization below is the first action and fills
         # these blocks in its own job; eager here only added a
         # dedicated job per micro-batch. Pre-update ordering unchanged.
-        new_assigned = self._assigned(c, centers).localCheckpoint(eager=False)
+        new_assigned = (
+            _query_probes_exact(
+                _unit(
+                    batch_df, self.id_col, self.vec_col, "query_id", dim,
+                    materialize=True,
+                ),
+                centers,
+                self.n_assign,
+                dim,
+            )
+            .select(
+                F.col("query_id").alias("_id"),
+                F.col("_qu").alias("_u"),
+                F.col("_cl").alias("cluster"),
+            )
+            .localCheckpoint(eager=False)
+        )
         if os.path.isdir(self.vectors_path):
-            store = (
-                spark.read.parquet(self.vectors_path)
-                .select(
-                    F.col(self.id_col).alias("_id"),
-                    F.col("c_vec").alias("_v"),
-                    "cluster",
+            store = spark.read.parquet(self.vectors_path)
+            if "_u" not in store.columns:
+                raise ValueError(
+                    f"vector store at {self.vectors_path} predates the "
+                    "unit-vector layout (no _u column): rebuild the store"
                 )
+            store = store.select(
+                F.col(self.id_col).alias("_id"), "_u", "cluster"
             )
             thr = self.threshold
 
@@ -167,31 +172,26 @@ class StreamingSemDedup:
                 )
                 if len(new_pdf) == 0 or len(old_pdf) == 0:
                     return empty
-                vn = np.stack(new_pdf["_v"].to_numpy()).astype(np.float64)
-                vo = np.stack(old_pdf["_v"].to_numpy()).astype(np.float64)
-                nn = np.linalg.norm(vn, axis=1)
-                no = np.linalg.norm(vo, axis=1)
+                un = np.stack(new_pdf["_u"].to_numpy()).astype(np.float64)
+                uo = np.stack(old_pdf["_u"].to_numpy()).astype(np.float64)
                 ids_n = new_pdf["_id"].to_numpy()
                 ids_o = old_pdf["_id"].to_numpy()
                 out = [empty]
-                B = 2048
-                for i0 in range(0, len(vn), B):
-                    for j0 in range(0, len(vo), B):
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            M = (vn[i0 : i0 + B] @ vo[j0 : j0 + B].T) / np.outer(
-                                nn[i0 : i0 + B], no[j0 : j0 + B]
-                            )
-                        ii, jj = np.nonzero(M >= thr)
+                B = 2048  # bounds each block's gram matrix to B x B
+                for i0 in range(0, len(un), B):
+                    for j0 in range(0, len(uo), B):
+                        cos = _exact_fold_gram(un[i0 : i0 + B], uo[j0 : j0 + B])
+                        a = ids_n[i0 : i0 + B, None]
+                        b = ids_o[None, j0 : j0 + B]
+                        # a re-delivered doc matching itself is not a dup
+                        ii, jj = np.nonzero((cos >= thr) & (a != b))
                         if len(ii):
-                            a = ids_n[ii + i0]
-                            b = ids_o[jj + j0]
-                            keep = a != b  # re-delivered doc, not a dup
                             out.append(
                                 pd.DataFrame(
                                     {
-                                        "new_id": a[keep],
-                                        "old_id": b[keep],
-                                        "_cos": M[ii, jj][keep],
+                                        "new_id": ids_n[ii + i0],
+                                        "old_id": ids_o[jj + j0],
+                                        "_cos": cos[ii, jj],
                                     }
                                 )
                             )
@@ -227,7 +227,6 @@ class StreamingSemDedup:
 
         (
             new_assigned.withColumnRenamed("_id", self.id_col)
-            .withColumnRenamed("_v", "c_vec")
             .withColumn("ingest_batch", F.lit(int(batch_id)))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

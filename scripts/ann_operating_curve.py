@@ -92,7 +92,7 @@ def pq_parameter_sweep(spark, ix, k: int) -> dict:
             for _ in range(2):
                 t0 = time.time()
                 rows = ix.query_ivfpq_index_exact(
-                    spark, path, queries, k=k, nprobe=nprobe, m=m
+                    spark, path, queries, k=k, nprobe=nprobe
                 ).collect()
                 times.append(time.time() - t0)
             got: dict[int, set[int]] = {}

@@ -548,6 +548,42 @@ def test_maintain_rollup_survives_compaction_refold(spark, tmp_path):
     assert after == before == {("2024-01-03", "debug"): 2}
 
 
+def test_maintain_rollup_skips_non_iso_partitions(spark, tmp_path):
+    """A ``log_date=__HIVE_DEFAULT_PARTITION__`` dir (NULL dates) is not
+    a date the pruned refresh can cover: it must be neither reported
+    nor recorded as refreshed. Non-canonical spellings Python would
+    still parse (20240105) are rejected the same way."""
+    import json
+    import os
+    import shutil
+
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.control import (
+        _is_iso_date,
+        maintain_rollup,
+    )
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.sink import write_log_table
+
+    table, rollup = str(tmp_path / "t"), str(tmp_path / "mv")
+    write_log_table(
+        _mk_clean(spark, [("2024-01-06", "a error")]), table, batch_id=0
+    )
+    shutil.copytree(
+        os.path.join(table, "log_date=2024-01-06"),
+        os.path.join(table, "log_date=__HIVE_DEFAULT_PARTITION__"),
+    )
+    assert maintain_rollup(spark, table, rollup) == ["2024-01-06"]
+    with open(os.path.join(rollup, "_rollup_manifest.json")) as fh:
+        assert sorted(json.load(fh)) == ["2024-01-06"]
+    got = {
+        (str(r.log_date), r.severity): r.n
+        for r in spark.read.parquet(rollup).collect()
+    }
+    assert got == {("2024-01-06", "error"): 1}
+    assert _is_iso_date("2024-01-05")
+    assert not _is_iso_date("20240105")
+    assert not _is_iso_date("__HIVE_DEFAULT_PARTITION__")
+
+
 def test_maintain_rollup_skips_inflight_batches(spark, tmp_path):
     import os
 

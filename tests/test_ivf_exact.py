@@ -1,12 +1,17 @@
 """Engine-exact (oracle-replayable) IVF / IVF-PQ: persisted index ==
 one-shot bit-equality, partition pruning, layout-invariant fits,
-recall-gate behavior, planted-duplicate retrieval."""
+recall-gate behavior, planted-duplicate retrieval, and the persisted
+paths' input contracts (format marker, unique query ids)."""
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators import ivf_exact
 from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
     ann_topk_ivf_exact,
     ann_topk_ivfpq_exact,
@@ -44,15 +49,80 @@ def test_ivf_exact_index_matches_oneshot_and_prunes(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan and "cluster" in plan
 
 
-def test_ivfpq_exact_index_matches_oneshot(spark, sf_dir, tmp_path):
+@pytest.fixture(scope="module")
+def ivfpq_index(spark, sf_dir, tmp_path_factory):
+    """A default-parameter IVF-PQ index over vec_id >= 10 (read-only:
+    tests that mutate it work on a copy)."""
+    path = str(tmp_path_factory.mktemp("ivfpqx") / "idx")
+    build_ivfpq_index_exact(
+        _emb(spark, sf_dir).filter(F.col("vec_id") >= 10), path
+    )
+    return path
+
+
+def test_ivfpq_exact_index_matches_oneshot(spark, sf_dir, ivfpq_index):
     emb = _emb(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivfpqx")
-    build_ivfpq_index_exact(corpus, path)
-    via_index = query_ivfpq_index_exact(spark, path, queries, k=5)
+    via_index = query_ivfpq_index_exact(spark, ivfpq_index, queries, k=5)
     oneshot = ann_topk_ivfpq_exact(corpus=corpus, queries=queries, k=5)
     assert _rows(via_index) == _rows(oneshot)
+    # the code-table scan (reading the _ts code arrays) carries a
+    # cluster PartitionFilter
+    plan = via_index._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "_ts" in ln]
+    assert scans and any("PartitionFilters" in ln and "cluster" in ln
+                         for ln in scans)
+
+
+def test_ivfpq_index_without_format_marker_fails_fast(
+    spark, sf_dir, tmp_path, ivfpq_index
+):
+    """An index without the current format marker (built before the
+    layout it reads, or interrupted before the marker landed) raises a
+    rebuild request up front instead of failing deep in the plan."""
+    old = str(tmp_path / "old")
+    shutil.copytree(ivfpq_index, old)
+    shutil.rmtree(os.path.join(old, ivf_exact._IVFPQ_FORMAT_DIR))
+    emb = _emb(spark, sf_dir)
+    with pytest.raises(ValueError, match="rebuild the index"):
+        query_ivfpq_index_exact(
+            spark, old, emb.filter(F.col("vec_id") < 10), k=5
+        )
+    with pytest.raises(ValueError, match="rebuild the index"):
+        ivf_exact.append_ivfpq_index_exact(
+            emb.filter(F.col("vec_id") < 10), old, batch_id=1
+        )
+    # an older version number is refused the same way
+    ivf_exact._write_ivfpq_format(
+        spark, old, ivf_exact.IVFPQ_FORMAT_VERSION - 1
+    )
+    with pytest.raises(
+        ValueError,
+        match=f"has format version {ivf_exact.IVFPQ_FORMAT_VERSION - 1}",
+    ):
+        query_ivfpq_index_exact(
+            spark, old, emb.filter(F.col("vec_id") < 10), k=5
+        )
+
+
+def test_persisted_queries_reject_repeated_query_ids(
+    spark, sf_dir, tmp_path, ivfpq_index
+):
+    """A repeated query id would get every neighbour twice and lose
+    true neighbours from its top-k; the persisted paths name the
+    repeated ids instead."""
+    emb = _emb(spark, sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5).unionByName(
+        emb.filter(F.col("vec_id") == 3)
+    )
+    with pytest.raises(ValueError, match=r"repeated ids: \[3\]"):
+        query_ivfpq_index_exact(spark, ivfpq_index, queries, k=5)
+    ivf = str(tmp_path / "ivfx")
+    build_ivf_index_exact(emb.filter(F.col("vec_id") >= 10), ivf)
+    with pytest.raises(ValueError, match=r"repeated ids: \[3\]"):
+        query_ivf_index_exact(spark, ivf, queries, k=5)
 
 
 def test_fit_centroids_exact_layout_invariant(spark, sf_dir):

@@ -59,8 +59,8 @@ def test_knn_graph_chunked_equals_single_chunk(spark):
 
 
 def test_ivf_graph_finds_planted_duplicates(spark):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_knn_graph_ivf,
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        ann_knn_graph_ivf_exact,
     )
 
     mat = _vectors(n=60, dim=12, seed=11)
@@ -70,15 +70,15 @@ def test_ivf_graph_finds_planted_duplicates(spark):
         (100 + i, [float(x) + 0.001 for x in mat[i]]) for i in range(10)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = ann_knn_graph_ivf(df, k=3, n_clusters=4, nprobe=2).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.query_id, []).append(r.neighbor_id)
+    got = ann_knn_graph_ivf_exact(
+        df, k=3, n_clusters=4, nprobe=2, dim=12
+    ).collect()
+    top1 = {r.query_id: r.neighbor_id for r in got if r.rnk == 1}
     # a twin is (near) cosine-1: same cluster by construction, so the
     # IVF graph must rank it as the #1 neighbor on both sides
     for i in range(10):
-        assert by_q[100 + i][0] == i
-        assert by_q[i][0] == 100 + i
+        assert top1[100 + i] == i
+        assert top1[i] == 100 + i
 
 
 def test_hard_negatives_are_cross_label_and_exact(spark):

@@ -14,13 +14,15 @@ from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.dedup import (
     normalized_dedup_groups,
     simhash_near_dup_pairs,
 )
+from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+    ann_topk_ivf_exact,
+    ann_topk_lsh_exact,
+)
 from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.multimodal import (
     decode_image_features,
     with_media_meta,
 )
 from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-    ann_topk_ivf,
-    ann_topk_lsh,
     cosine_topk,
     with_recall_at_k,
 )
@@ -184,9 +186,9 @@ def test_ann_recall_floors(spark, sf_dir):
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
     exact = cosine_topk(corpus, queries, 5)
-    ivf = with_recall_at_k(ann_topk_ivf(corpus, queries, 5), exact, 5)
+    ivf = with_recall_at_k(ann_topk_ivf_exact(corpus, queries, 5), exact, 5)
     lsh = with_recall_at_k(
-        ann_topk_lsh(corpus, queries, 5, num_planes=4), exact, 5
+        ann_topk_lsh_exact(corpus, queries, 5, num_planes=4), exact, 5
     )
     # floors measured on the driver's synthetic (near-uniform) embeddings —
     # the hardest case for ANN; real clustered embeddings do better
@@ -231,9 +233,9 @@ def test_with_recall_at_k_edge_cases(spark):
 
 def test_recall_ok_gate_flips_on_degraded_index(spark, sf_dir):
     # The recall_ok gate: a healthy ANN result carries recall_ok=True on
-    # every row; a degraded index (here: centroids fit on a 2-point
-    # sample with nprobe=1 — the degenerate-centroids failure mode, or
-    # in the worst case an ANN result disjoint from the exact top-k)
+    # every row; a degraded index (here: unconverged seed centroids
+    # with nprobe=1 — the degenerate-centroids failure mode, or in the
+    # worst case an ANN result disjoint from the exact top-k)
     # must flip recall_ok to False in the EMITTED rows, so the driver's
     # snapshot diff catches quality regressions without pytest.
     emb = load(spark, sf_dir, "embeddings")
@@ -242,7 +244,7 @@ def test_recall_ok_gate_flips_on_degraded_index(spark, sf_dir):
     exact = cosine_topk(corpus, queries, 5)
 
     healthy = with_recall_at_k(
-        ann_topk_ivf(corpus, queries, 5), exact, 5, min_mean_recall=0.5
+        ann_topk_ivf_exact(corpus, queries, 5), exact, 5, min_mean_recall=0.5
     )
     rows = healthy.collect()
     assert rows and all(r.recall_ok is True for r in rows)
@@ -256,12 +258,10 @@ def test_recall_ok_gate_flips_on_degraded_index(spark, sf_dir):
     rows = degraded.collect()
     assert rows and all(r.recall_ok is False for r in rows)
 
-    # degenerate centroids (2-point fit sample, single probe) may still
+    # degenerate centroids (no Lloyd iteration, single probe) may still
     # luck into candidates, but the gate column must be present and
     # consistent with the mean of the emitted recall values
-    bad_ivf = ann_topk_ivf(
-        corpus, queries, 5, nprobe=1, fit_sample_limit=2
-    )
+    bad_ivf = ann_topk_ivf_exact(corpus, queries, 5, nprobe=1, iters=0)
     gated = with_recall_at_k(bad_ivf, exact, 5, min_mean_recall=0.5)
     out = gated.select("query_id", "recall_at_k", "recall_ok").collect()
     per_q = {r.query_id: r.recall_at_k for r in out}
@@ -466,30 +466,6 @@ def test_sample_frames_every_n(spark):
     assert all(f == frames[i] for i, f in got)
 
 
-def test_ivf_index_build_query_matches_oneshot(spark, sf_dir, tmp_path):
-    import re
-
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        build_ivf_index,
-        query_ivf_index,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivf")
-    build_ivf_index(corpus, path)
-
-    got = query_ivf_index(spark, path, queries, k=5)
-    want = ann_topk_ivf(corpus, queries, k=5)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    # the probed-cluster IN-filter must reach the parquet scan as a
-    # PARTITION filter (unprobed cluster dirs are never read)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[[^\]]*cluster", plan)
-
-
 def test_char_shingles_semantics(spark):
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.text import (
         char_shingles,
@@ -540,59 +516,56 @@ def _blob_rows(n_per, dim=8, seed=3):
 def test_fit_centroids_distributed_separates_blobs(spark):
     import numpy as np
 
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        _assign_factory,
-        fit_centroids_distributed,
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        _assign_exact,
+        _unit,
+        fit_centroids_exact,
     )
 
     df = spark.createDataFrame(_blob_rows(40))
-    centers = fit_centroids_distributed(df, n_clusters=2, iters=5)
-    assert centers.shape == (2, 8)
+    centers = fit_centroids_exact(df, n_clusters=2, iters=5, dim=8)
+    c = np.asarray(centers)
+    assert c.shape == (2, 8)
     # unit-norm spherical centroids
-    assert np.allclose(np.linalg.norm(centers, axis=1), 1.0)
-    out = df.withColumn(
-        "cl", _assign_factory(centers)(F.col("embedding").cast("array<double>"))
-    ).collect()
-    a_clusters = {r.cl for r in out if r.vec_id < 40}
-    b_clusters = {r.cl for r in out if r.vec_id >= 40}
+    assert np.allclose(np.linalg.norm(c, axis=1), 1.0, atol=1e-8)
+    cn = _unit(df, "vec_id", "embedding", "_id", 8, materialize=True)
+    out = _assign_exact(cn, centers, 8, "_id").collect()
+    a_clusters = {r._cl for r in out if r._id < 40}
+    b_clusters = {r._cl for r in out if r._id >= 40}
     assert len(a_clusters) == 1 and len(b_clusters) == 1
     assert a_clusters != b_clusters
 
 
-def test_fit_centroids_distributed_layout_invariant(spark):
+def test_distributed_centers_inject_into_ivf(spark):
     import numpy as np
 
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        fit_centroids_distributed,
-    )
-
-    df = spark.createDataFrame(_blob_rows(30))
-    c1 = fit_centroids_distributed(df.repartition(1), n_clusters=2, iters=3)
-    c2 = fit_centroids_distributed(df.repartition(16, "vec_id"), n_clusters=2, iters=3)
-    # hash-ordered init makes the fit layout-independent up to float
-    # summation order inside the means
-    assert np.allclose(c1, c2, atol=1e-9)
-
-
-def test_distributed_centers_inject_into_ivf(spark):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivf,
-        fit_centroids_distributed,
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        fit_centroids_exact,
     )
 
     df = spark.createDataFrame(_blob_rows(30))
     corpus, queries = df.filter("vec_id >= 4"), df.filter("vec_id < 4")
-    centers = fit_centroids_distributed(corpus, n_clusters=2, iters=3)
-    out = ann_topk_ivf(corpus, queries, k=3, nprobe=1, centers=centers).collect()
+    centers = fit_centroids_exact(corpus, n_clusters=2, iters=3, dim=8)
+    # the Spark-job Lloyd fit separates the blobs: unit-norm spherical
+    # centroids, one hugging +e0 (blob A) and one hugging +e1 (blob B)
+    c = np.asarray(centers)
+    assert c.shape == (2, 8)
+    assert np.allclose(np.linalg.norm(c, axis=1), 1.0, atol=1e-8)
+    assert sorted(int(np.argmax(row)) for row in c) == [0, 1]
+    out = ann_topk_ivf_exact(
+        corpus, queries, k=3, nprobe=1, centers=centers, dim=8
+    ).collect()
     assert len(out) == 12  # 4 queries x 3
     # nprobe=1 on separated blobs: every neighbor comes from blob A
-    assert all(r.neighbor_id < 30 + 4 for r in out)
+    assert all(r.neighbor_id < 30 for r in out)
 
 
 def test_semdedup_finds_planted_pairs_with_multiassign(spark):
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        semdedup_pairs_exact,
+    )
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
         cosine_pairs_exact,
-        semdedup_pairs,
     )
 
     base = _blob_rows(25)
@@ -600,7 +573,9 @@ def test_semdedup_finds_planted_pairs_with_multiassign(spark):
     planted = [Row(vec_id=100 + j, embedding=base[0].embedding) for j in range(3)]
     planted.append(Row(vec_id=110, embedding=base[1].embedding))
     df = spark.createDataFrame(base + planted)
-    sem = semdedup_pairs(df, threshold=0.999, n_clusters=4, n_assign=2).collect()
+    sem = semdedup_pairs_exact(
+        df, threshold=0.999, n_clusters=4, n_assign=2, dim=8
+    ).collect()
     got = {(r.id_a, r.id_b) for r in sem}
     exact = {(r.id_a, r.id_b)
              for r in cosine_pairs_exact(df, threshold=0.999).collect()}
@@ -612,11 +587,11 @@ def test_semdedup_finds_planted_pairs_with_multiassign(spark):
 
 
 def test_lsh_recall_gate_flips_on_degraded_config(spark, sf_dir):
-    # The recall_ok gate must actually TRIP: 12 hyperplanes without
-    # multiprobe slice near-uniform vectors into ~4096 buckets, so a
-    # query's single probe bucket holds almost no true neighbors and
-    # mean recall collapses below the 0.25 floor. The production knobs
-    # (num_planes=4, multiprobe=True) restore it — both directions
+    # The recall_ok gate must actually TRIP: 12 hyperplanes slice
+    # near-uniform vectors into ~4096 buckets, so a query's 13 probed
+    # buckets (own + Hamming-1 flips) hold almost no true neighbors and
+    # mean recall collapses below the 0.25 floor. The production knob
+    # (num_planes=4) restores it — both directions
     # asserted against the SAME gate column the emitted snapshot
     # carries, so this pins that a quality regression is visible.
     emb = load(spark, sf_dir, "embeddings")
@@ -625,21 +600,21 @@ def test_lsh_recall_gate_flips_on_degraded_config(spark, sf_dir):
     exact = cosine_topk(corpus, queries, 5)
 
     bad = with_recall_at_k(
-        ann_topk_lsh(corpus, queries, 5, num_planes=12, multiprobe=False),
+        ann_topk_lsh_exact(corpus, queries, 5, num_planes=12),
         exact, 5, min_mean_recall=0.25,
     )
     assert bad.select("recall_ok").distinct().collect()[0].recall_ok is False
 
     good = with_recall_at_k(
-        ann_topk_lsh(corpus, queries, 5, num_planes=4, multiprobe=True),
+        ann_topk_lsh_exact(corpus, queries, 5, num_planes=4),
         exact, 5, min_mean_recall=0.25,
     )
     assert good.select("recall_ok").distinct().collect()[0].recall_ok is True
 
 
 def test_ivfpq_planted_duplicate_and_recall(spark, sf_dir):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivfpq,
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        ann_topk_ivfpq_exact,
     )
 
     emb = load(spark, sf_dir, "embeddings")
@@ -651,7 +626,10 @@ def test_ivfpq_planted_duplicate_and_recall(spark, sf_dir):
     planted = corpus.unionByName(
         queries.withColumn("vec_id", F.col("vec_id") + 100000)
     )
-    out = ann_topk_ivfpq(corpus=planted, queries=queries, k=3)
+    # the operating point of the registered IVF-PQ queries (m16 x 64)
+    out = ann_topk_ivfpq_exact(
+        corpus=planted, queries=queries, k=5, m=16, n_codes=64
+    )
     top1 = {r.query_id: r for r in out.filter("rnk = 1").collect()}
     assert len(top1) == 10
     for qid, r in top1.items():
@@ -662,29 +640,50 @@ def test_ivfpq_planted_duplicate_and_recall(spark, sf_dir):
     # refine makes PQ error a shortlist-quality issue only)
     exact = cosine_topk(corpus, queries, 5)
     pq = with_recall_at_k(
-        ann_topk_ivfpq(corpus, queries, 5), exact, 5, min_mean_recall=0.5
+        ann_topk_ivfpq_exact(corpus=corpus, queries=queries, k=5, m=16,
+                             n_codes=64),
+        exact, 5, min_mean_recall=0.5,
     )
     assert pq.select("recall_ok").distinct().collect()[0].recall_ok is True
 
 
 def test_pq_codes_shape_and_determinism(spark, sf_dir):
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        as_double,
-        fit_pq_codebooks,
-        pq_encode,
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        _unit,
+        encode_codes_arrays,
+        fit_centroids_exact,
+        fit_pq_codebooks_exact,
     )
 
-    emb = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double(F.col("embedding")).alias("c_vec"),
+    emb = load(spark, sf_dir, "embeddings")
+
+    def normalized(df):
+        return _unit(df, "vec_id", "embedding", "neighbor_id",
+                     materialize=True)
+
+    cn = normalized(emb)
+    centers = fit_centroids_exact(emb, n_clusters=4, iters=1)
+    books = fit_pq_codebooks_exact(
+        cn.withColumnRenamed("neighbor_id", "_id"), spark,
+        m=8, n_codes=16, iters=1,
     )
-    books = fit_pq_codebooks(emb, m=8, n_codes=16)
-    assert books.shape[0] == 8 and books.shape[1] == 16
-    enc = pq_encode(emb, books)
-    rows = enc.select("neighbor_id", "pq_codes").collect()
-    assert all(len(r.pq_codes) == 8 for r in rows)  # 8 bytes per vector
-    assert all(0 <= c < 16 for r in rows for c in r.pq_codes)
+    # one 8-dim codeword per (subspace, code)
+    assert sorted((j, t) for j, t, _ in books) == [
+        (j, t) for j in range(8) for t in range(16)
+    ]
+    assert all(len(v) == 8 for _, _, v in books)
+    enc = {
+        r["neighbor_id"]: list(r["_ts"])
+        for r in encode_codes_arrays(cn, centers, books, m=8).collect()
+    }
+    assert len(enc) == emb.count()
+    assert all(len(c) == 8 for c in enc.values())  # 8 codes per vector
+    assert all(0 <= t < 16 for c in enc.values() for t in c)
     # layout-independence: a repartitioned copy encodes identically
-    enc2 = {r.neighbor_id: list(r.pq_codes)
-            for r in pq_encode(emb.repartition(7), books).collect()}
-    assert {r.neighbor_id: list(r.pq_codes) for r in rows} == enc2
+    enc2 = {
+        r["neighbor_id"]: list(r["_ts"])
+        for r in encode_codes_arrays(
+            normalized(emb.repartition(7)), centers, books, m=8
+        ).collect()
+    }
+    assert enc == enc2

@@ -188,8 +188,7 @@ def test_oneshot_ivfpq_matches_persisted_after_layout_change(
         iters=1, pq_iters=1, dim=fx["dim"],
     )
     via_index = ivf_exact.query_ivfpq_index_exact(
-        spark, path, fx["queries"], k=3, nprobe=2, m=fx["m"],
-        dim=fx["dim"],
+        spark, path, fx["queries"], k=3, nprobe=2,
     )
     oneshot = ivf_exact.ann_topk_ivfpq_exact(
         corpus=fx["corpus"], queries=fx["queries"], k=3,

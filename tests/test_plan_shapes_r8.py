@@ -54,20 +54,20 @@ def test_sole_blame_dataframe_plan_has_semi_and_anti(spark, sf_dir):
 
 
 def test_ivfpq_prunes_to_pq_codes(spark, sf_dir):
-    # the ADC scan path must carry pq_codes (8-16 tinyints), not the
-    # raw c_vec doubles — the refine fetch is the only raw-vector read
+    # the ADC scan path must carry the PQ code arrays (_ts, m ints per
+    # vector) — the refine fetch is the only full-vector read
     from pyspark.sql import functions as F
 
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivfpq,
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        ann_topk_ivfpq_exact,
     )
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
 
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") >= 10)
     queries = emb.filter(F.col("vec_id") < 10)
-    plan = plan_of(ann_topk_ivfpq(corpus, queries, k=3))
-    assert "pq_codes" in plan
+    plan = plan_of(ann_topk_ivfpq_exact(corpus, queries, k=3))
+    assert "_ts" in plan
     assert "CartesianProduct" not in plan
 
 

@@ -157,21 +157,70 @@ def test_jpeg_codec_roundtrip_and_multimodal_paths(spark):
     assert dist <= 8
 
 
+def _ivfpq_code_rows(spark, index):
+    """(neighbor_id, cluster, codes) of a persisted IVF-PQ index."""
+    return sorted(
+        (r["neighbor_id"], r["cluster"], tuple(r["_ts"]))
+        for r in spark.read.parquet(f"{index}/codes").collect()
+    )
+
+
+def _ivfpq_frozen_reference(spark, index, corpus, queries, nprobe=4):
+    """What an index over ``corpus`` must hold once its quantizer is
+    frozen at ``index``'s persisted artifacts: encode_codes_arrays over
+    the whole corpus under those centroids/codebooks, and the one-shot
+    search over that encoding. Returns (sorted code rows, sorted
+    top-5 rows)."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators import (
+        ivf_exact,
+    )
+
+    centers, books, m, dim = ivf_exact._read_ivfpq_artifacts(spark, index)
+    cn = ivf_exact._unit(corpus, "vec_id", "embedding", "neighbor_id", dim,
+                         materialize=True)
+    codes = ivf_exact.encode_codes_arrays(cn, centers, books, m=m, dim=dim)
+    rows = sorted(
+        (r["neighbor_id"], r["_cl"], tuple(r["_ts"])) for r in codes.collect()
+    )
+    hits = ivf_exact.ann_topk_ivfpq_exact(
+        corpus, queries, k=5, nprobe=nprobe, m=m, dim=dim,
+        artifacts=(centers, books, codes),
+    )
+    return rows, sorted(map(tuple, hits.collect()))
+
+
+def _code_scan_prunes(df):
+    """The code-table scan (the one reading the ``_ts`` code arrays —
+    its Location string may be abbreviated) carries a cluster
+    PartitionFilter."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [
+        ln for ln in plan.splitlines() if "FileScan" in ln and "_ts" in ln
+    ]
+    return bool(scans) and any(
+        "PartitionFilters" in ln and "cluster" in ln for ln in scans
+    )
+
+
 def test_ivfpq_index_append_equals_rebuild(spark, sf_dir, tmp_path):
-    """append(batch2) after build(batch1) is equivalent to building
-    over batch1 ∪ batch2 with the fit frozen on batch1 (the FAISS
+    """append(batch2) after build(batch1) is equivalent to encoding
+    batch1 ∪ batch2 under batch1's persisted artifacts (the FAISS
     add-with-fixed-quantizer contract): identical code-table rows and
     identical probe results. Re-delivering the same append batch is a
     no-op (dynamic partition overwrite), and compaction folds the
     append leafs without changing results or losing the cluster
     PartitionFilter."""
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        append_ivfpq_index,
-        build_ivfpq_index,
-        compact_ivfpq_index,
-        query_ivfpq_index,
+    import os
+
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        append_ivfpq_index_exact,
+        build_ivfpq_index_exact,
+        query_ivfpq_index_exact,
     )
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.streaming.annindex import (
+        StreamingIVFPQIngest,
+    )
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
@@ -180,40 +229,23 @@ def test_ivfpq_index_append_equals_rebuild(spark, sf_dir, tmp_path):
     b2 = corpus.filter(F.col("vec_id") % 3 == 0)
 
     inc = str(tmp_path / "inc")
-    build_ivfpq_index(b1, inc)
-    append_ivfpq_index(b2, inc, batch_id=1)
+    build_ivfpq_index_exact(b1, inc)
+    append_ivfpq_index_exact(b2, inc, batch_id=1)
+    ref_rows, expected = _ivfpq_frozen_reference(spark, inc, corpus, queries)
 
-    ref = str(tmp_path / "ref")
-    build_ivfpq_index(corpus, ref, fit_df=b1)
+    assert _ivfpq_code_rows(spark, inc) == ref_rows and len(ref_rows) > 0
 
-    def codes_rows(path):
-        df = spark.read.parquet(f"{path}/codes")
-        return sorted(
-            (r.neighbor_id, r.cluster, tuple(r.pq_codes)) for r in df.collect()
-        )
+    def probe():
+        return query_ivfpq_index_exact(spark, inc, queries, k=5, nprobe=4)
 
-    assert codes_rows(inc) == codes_rows(ref) and len(codes_rows(inc)) > 0
-
-    def probe(path):
-        return sorted(
-            map(
-                tuple,
-                query_ivfpq_index(
-                    spark, path, corpus, queries, k=5, nprobe=4
-                ).collect(),
-            )
-        )
-
-    expected = probe(ref)
-    assert probe(inc) == expected and len(expected) > 0
+    assert sorted(map(tuple, probe().collect())) == expected
+    assert len(expected) > 0
 
     # retry the same batch: dynamic overwrite makes it exactly-once
-    append_ivfpq_index(b2, inc, batch_id=1)
-    assert codes_rows(inc) == codes_rows(ref)
+    append_ivfpq_index_exact(b2, inc, batch_id=1)
+    assert _ivfpq_code_rows(spark, inc) == ref_rows
 
     # fold: fewer files, same rows/results, pruning intact
-    import os
-
     def n_files(path):
         return sum(
             1
@@ -223,18 +255,13 @@ def test_ivfpq_index_append_equals_rebuild(spark, sf_dir, tmp_path):
         )
 
     before = n_files(inc)
-    assert compact_ivfpq_index(spark, inc) == before
+    folded = StreamingIVFPQIngest(inc).compact(spark)
+    assert folded[os.path.join(inc, "codes")] == before
     assert n_files(inc) < before
-    assert codes_rows(inc) == codes_rows(ref)
-    res = query_ivfpq_index(spark, inc, corpus, queries, k=5, nprobe=4)
+    assert _ivfpq_code_rows(spark, inc) == ref_rows
+    res = probe()
     assert sorted(map(tuple, res.collect())) == expected
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    scans = [
-        ln for ln in plan.splitlines() if "FileScan" in ln and "codes" in ln
-    ]
-    assert scans and any(
-        "PartitionFilters" in ln and "cluster" in ln for ln in scans
-    )
+    assert _code_scan_prunes(res)
 
 
 # --- RIFF/AVI Motion-JPEG container (vendored, public spec) -------------
@@ -434,19 +461,15 @@ def test_sentence_boilerplate_removal_semantics(spark):
 def test_streaming_ivfpq_ingest_matches_batch_build(spark, sf_dir, tmp_path):
     """Real Structured Streaming run (file source, maxFilesPerTrigger=1,
     foreachBatch): batch 0 bootstraps the index, later batches append
-    with the quantizer frozen. End state == build-once over the union
-    with fit_df = batch 0 (the contract test_ivfpq_index_append_equals_
-    rebuild pins for direct calls, here THROUGH the engine), a restart
-    from the same checkpoint ingests only the new file, and compaction
-    preserves results + the cluster PartitionFilter."""
+    with the quantizer frozen. End state == encoding the union under
+    the artifacts batch 0 fit (the contract test_ivfpq_index_append_
+    equals_rebuild pins for direct calls, here THROUGH the engine), a
+    restart from the same checkpoint ingests only the new file, and
+    compaction preserves results + the cluster PartitionFilter."""
     import glob
     import os
     import shutil
 
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        build_ivfpq_index,
-        query_ivfpq_index,
-    )
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.streaming.annindex import (
         StreamingIVFPQIngest,
@@ -492,39 +515,24 @@ def test_streaming_ivfpq_ingest_matches_batch_build(spark, sf_dir, tmp_path):
 
     run_stream()
 
-    ref3 = str(tmp_path / "ref3")
-    build_ivfpq_index(
-        parts[0].unionByName(parts[1]).unionByName(parts[2]),
-        ref3,
-        fit_df=parts[0],
-    )
+    def union(n):
+        out = parts[0]
+        for p in parts[1:n]:
+            out = out.unionByName(p)
+        return out
 
-    def codes_rows(path):
-        df = spark.read.parquet(f"{path}/codes")
-        return sorted(
-            (r.neighbor_id, r.cluster, tuple(r.pq_codes)) for r in df.collect()
-        )
-
-    assert codes_rows(idx) == codes_rows(ref3) and len(codes_rows(idx)) > 0
+    ref_rows, _ = _ivfpq_frozen_reference(spark, idx, union(3), queries)
+    assert _ivfpq_code_rows(spark, idx) == ref_rows and len(ref_rows) > 0
 
     # restart with one new file: the checkpoint replays nothing, the
     # new file becomes batch 3, and the index now matches the 4-part
     # reference (still fit-frozen on part 0)
     land_file(3)
     run_stream()
-    ref4 = str(tmp_path / "ref4")
-    full = parts[0]
-    for p in parts[1:]:
-        full = full.unionByName(p)
-    build_ivfpq_index(full, ref4, fit_df=parts[0])
-    assert codes_rows(idx) == codes_rows(ref4)
-
-    expected = sorted(
-        map(
-            tuple,
-            query_ivfpq_index(spark, ref4, corpus, queries, k=5, nprobe=4).collect(),
-        )
+    ref_rows, expected = _ivfpq_frozen_reference(
+        spark, idx, union(4), queries
     )
+    assert _ivfpq_code_rows(spark, idx) == ref_rows
     got = ingest.query(spark, queries, k=5, nprobe=4)
     assert sorted(map(tuple, got.collect())) == expected and len(expected) > 0
 
@@ -538,14 +546,9 @@ def test_streaming_ivfpq_ingest_matches_batch_build(spark, sf_dir, tmp_path):
         if d.startswith("ingest_batch=")
     ]
     assert leafs == ["ingest_batch=-1"]
-    assert codes_rows(idx) == codes_rows(ref4)
-    res = ingest.query(spark, queries, k=5, nprobe=4)
-    assert sorted(map(tuple, res.collect())) == expected
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan" in ln and "codes" in ln]
-    assert scans and any(
-        "PartitionFilters" in ln and "cluster" in ln for ln in scans
-    )
+    got = ingest.query(spark, queries, k=5, nprobe=4)
+    assert sorted(map(tuple, got.collect())) == expected
+    assert _code_scan_prunes(got)
 
 
 # --- ISO-BMFF/MP4 Motion-JPEG container (vendored, public spec) ----------

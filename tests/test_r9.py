@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -200,11 +201,12 @@ def test_streaming_semdedup_matches_batch(spark, sf_dir, tmp_path):
     """Stretch ask from the r8 verdict: per-batch IVF-style assignment
     + persisted vector store gives streaming SEMANTIC dedup. Two
     micro-batches' alert union must equal the batch SemDeDup pair set
-    at the same threshold and the same pinned centers."""
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        _fit_centroids,
-        as_double,
-        semdedup_pairs,
+    (semdedup_pairs_exact) at the same threshold and the same pinned
+    centers — also when the second batch runs in a restarted guard
+    that reloads the persisted centers."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        fit_centroids_exact,
+        semdedup_pairs_exact,
     )
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.streaming.semdedup import (
@@ -212,76 +214,67 @@ def test_streaming_semdedup_matches_batch(spark, sf_dir, tmp_path):
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        as_double(F.col("embedding")).alias("c_vec"),
-    )
-    centers = _fit_centroids(c, 16, 42, 25_000)
+    centers = fit_centroids_exact(emb, n_clusters=16)
     # the synthetic embeddings have no >0.9-cosine semantic dups; 0.3
     # yields a few hundred pairs, making the set equality non-vacuous
     thr = 0.3
 
     batch = sorted(
         (r.id_a, r.id_b, r.cosine)
-        for r in semdedup_pairs(emb, threshold=thr, centers=centers).collect()
+        for r in semdedup_pairs_exact(
+            emb, threshold=thr, centers=centers
+        ).collect()
     )
     assert batch  # threshold chosen so the equality is non-vacuous
 
-    guard = StreamingSemDedup(
-        str(tmp_path / "sem"), threshold=thr, centers=centers
-    )
-    a0 = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 0), 0)
-    a1 = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
-    streamed = sorted(
-        {
+    def pairs(alerts):
+        return {
             (min(r.new_id, r.old_id), max(r.new_id, r.old_id), r.cosine)
-            for r in a0.unionByName(a1).collect()
+            for r in alerts.collect()
         }
-    )
-    assert streamed == batch
+
+    store = str(tmp_path / "sem")
+    guard = StreamingSemDedup(store, threshold=thr, centers=centers)
+    a0 = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 0), 0)
+    # restart: a fresh guard pins the centers persisted by batch 0
+    guard = StreamingSemDedup(store, threshold=thr)
+    a1 = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
+    assert sorted(pairs(a0) | pairs(a1)) == batch
 
     # re-delivery of batch 1 adds nothing new (store self-match guard)
     a1_retry = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
-    retried = {
-        (min(r.new_id, r.old_id), max(r.new_id, r.old_id), r.cosine)
-        for r in a1_retry.collect()
-    }
-    assert retried <= set(batch)
+    assert pairs(a1_retry) <= set(batch)
 
     # compaction folds the store without changing future alerts
     folded = guard.compact(spark, up_to_batch=1)
     assert folded
+    a1_folded = guard.process_batch(emb.filter(F.col("vec_id") % 2 == 1), 1)
+    assert pairs(a1_folded) == pairs(a1_retry)
 
 
-def test_ivfpq_index_matches_oneshot_and_prunes(spark, sf_dir, tmp_path):
-    """A fresh persisted IVF-PQ index returns BIT-identical rows to the
-    one-shot ann_topk_ivfpq (same seeds, same deterministic fits), and
-    its code scan partition-prunes to the probed clusters."""
-    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.similarity import (
-        ann_topk_ivfpq,
-        build_ivfpq_index,
-        query_ivfpq_index,
+def test_streaming_semdedup_rejects_raw_vector_store(spark, sf_dir, tmp_path):
+    """A store written with the raw-vector layout (``c_vec``, no unit
+    ``_u`` column) asks for a rebuild instead of failing inside the
+    cross-batch plan."""
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.operators.ivf_exact import (
+        fit_centroids_exact,
     )
     from cloudwatch_sematext_aws_lambda_log_shipper_spark.plans.registry import load
+    from cloudwatch_sematext_aws_lambda_log_shipper_spark.streaming.semdedup import (
+        StreamingSemDedup,
+    )
 
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    queries = emb.filter(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivfpq")
-    build_ivfpq_index(corpus, path)
-
-    via_index = query_ivfpq_index(spark, path, corpus, queries, k=5, nprobe=4)
-    oneshot = ann_topk_ivfpq(corpus=corpus, queries=queries, k=5, nprobe=4)
-    a = sorted(map(tuple, via_index.collect()))
-    b = sorted(map(tuple, oneshot.collect()))
-    assert a == b and len(a) > 0
-
-    # the code-table scan must carry a cluster PartitionFilter
-    plan = via_index._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines()
-             if "FileScan" in ln and "codes" in ln]
-    assert scans and any("PartitionFilters" in ln and "cluster" in ln
-                         for ln in scans)
+    emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 50)
+    store = str(tmp_path / "sem")
+    spark.createDataFrame(
+        [(1, [1.0] * 64, 0, 0)],
+        "vec_id long, c_vec array<double>, cluster int, ingest_batch int",
+    ).write.partitionBy("ingest_batch").parquet(store + "/vectors")
+    guard = StreamingSemDedup(
+        store, centers=fit_centroids_exact(emb, n_clusters=4, iters=1)
+    )
+    with pytest.raises(ValueError, match="rebuild the store"):
+        guard.process_batch(emb, 1)
 
 
 def test_tokenize_pack_single_exchange(spark, sf_dir):
